@@ -51,14 +51,6 @@ def decode_image(payload: bytes) -> "np.ndarray":
     )
 
 
-def _fake_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Deterministic stand-in for a decode+embed kernel: integer-exact
-    byte-stream statistics (pure numpy over the payload buffer). All eight
-    features are exact integers so the value is bit-identical across
-    engines — no float summation-order hazards in the correctness gate."""
-    return _fake_features_batch([payload], dim)[0]
-
-
 def _fake_features_batch(payloads, dim: int = FEATURE_DIM) -> np.ndarray:
     """Vectorized fake kernel over a WHOLE Arrow batch -> (n, dim) int64.
 

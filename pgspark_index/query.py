@@ -1,23 +1,42 @@
-"""Query engine: top-k BM25 over the segment index.
+"""Query engine: BM25 over the segment index.
 
-Lifecycle (SURVEY.md §3.4):
-  driver: lexicon lookup for the query terms (parquet scan with an IN
-          pushdown over the term-sorted lexicon -> few rows) -> idf per
-          term from global df; global stats from lineage
-  executors: segments parquet scanned with term IN (...) pushdown — only
-          the query terms' posting rows are read (row-group pruning works
-          because segment files are written sorted by term) -> per-unit
-          block-max scoring in an Arrow-grouped UDF (a doc's postings live
-          entirely in one unit, so unit-local scores are final)
-  driver: global top-k via orderBy(score DESC, doc_id ASC).limit(k) —
-          Spark compiles this to TakeOrderedAndProject (distributed
-          partial top-k, no full sort).
+Every single-index query family runs through ONE per-unit executor,
+``_run_units`` — the query phase / reduce phase split of a search
+engine's shards and coordinating node. A doc's postings live entirely in
+one unit, so unit-local scores are final. The executor owns:
 
-The small idf/avgdl dict rides the UDF closure (broadcast-equivalent at
-this size — a handful of floats per query term).
+  * term stats: a driver-side lexicon lookup (idf, global df, and the
+    term -> (unit, part_id) pointers), no Spark job;
+  * the per-unit read of the query terms' segment rows (plus positions
+    when the kernel needs them);
+  * the sidecar lookup and ONE exclude array per unit — tombstones ∪
+    must-not docs ∪ a filter complement — plus an optional include array;
+  * the physical choice, made once from the byte gate
+    (``_driver_tier_ok``): score on the driver, or as a Spark job
+    (``groupBy("unit").applyInPandas``);
+  * the reduce.
+
+A family supplies only its kernel, ``(lists, sidecar, exclude, include)
+-> per-unit arrays``. The SAME kernel runs in both tiers, so results are
+bit-identical whichever tier ran. Three reduces:
+
+  * top-k with an integer k: global (score DESC, doc_id ASC) merge —
+    tier-eligible (``TakeOrderedAndProject`` when distributed);
+  * per-term sum (``explain_score``, at most |terms| rows) —
+    tier-eligible;
+  * all rows, ``unit`` column kept (k=None phrase, ``score_all_matches``,
+    ``match_docs``, escalation rounds) — always distributed: the rows feed
+    further DataFrame work, and a driver result becomes a SQL VALUES
+    literal of every row as soon as it is used as anything but a collect.
+
+``search_ranged`` (groups by (unit, range)), ``search_batch`` (by (unit,
+query chunk)) and ``search_multifield`` (several indexes) keep their own
+grouping.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
@@ -229,25 +248,26 @@ BATCH_RESULT_SCHEMA = "query_id int, doc_id bigint, score double"
 
 
 # ---- driver small-query tier ---------------------------------------------
-# A top-k query's real work is O(total postings of its terms); when that
-# total is small (bounded below), scheduling a Spark job (scan + shuffle +
-# Python workers + TakeOrdered: ~0.5 s of fixed cost at any data size)
-# dwarfs the work itself. Small queries therefore run entirely on the
-# driver: the SAME pyarrow term-IN segment read the executors would do
-# (row-group pruning via the term-sorted file layout), the SAME wand
-# scorers per unit, the SAME (score DESC, doc_id ASC) merge — bit-identical
-# results (the strategies are order-insensitive: per-doc sums accumulate in
-# sorted term order, see wand._exact_topk). This is the coordinating-node
-# shape of a search engine: a query touching a few hundred KB of postings
-# is one node's work; the cluster is for the queries (and corpora) that
-# aren't.
+# A query's real work is O(total postings of its terms); when that total
+# is small, scheduling a Spark job (scan + shuffle + Python workers +
+# TakeOrdered: ~0.5 s of fixed cost at any data size) dwarfs the work
+# itself. ``_run_units`` therefore runs a small query with a small result
+# (the top-k and per-term-sum reduces) entirely on the driver: the SAME
+# per-unit kernel over the SAME term-IN segment rows (pyarrow, row-group
+# pruned by the term-sorted layout and the lexicon's part-id pointers),
+# the SAME reduce order — bit-identical results (kernels are
+# order-insensitive: per-doc sums accumulate in sorted term order, see
+# wand._exact_topk). A query touching a few hundred KB of postings is one
+# node's work; the cluster is for the queries (and corpora) that aren't.
 #
-# The gate is a hard byte bound, not a heuristic: sum(df) over the query's
-# terms (already in hand from the lexicon lookup) x 16 B/posting decode
-# working set must fit PGSPARK_QUERY_DRIVER_BYTES (default 64 MB; 0
-# disables the tier entirely). Unit count is capped so a many-unit index
-# never serializes per-unit scoring on the driver. Everything over the
-# gate takes the distributed path unchanged.
+# ONE byte budget, PGSPARK_QUERY_DRIVER_BYTES (default 64 MB; 0 disables
+# every driver-side shortcut), gates the driver's work: here sum(df) over
+# the query's terms x 16 B/posting decode working set (positional kernels
+# decode positions on top of that), with the unit count capped so a
+# many-unit index never serializes per-unit scoring on the driver; the
+# in-memory term dictionary (``_term_stats``); and the unpruned lexicon
+# expansion stream (``_expand_needs_job``). Everything over the gate takes
+# the distributed path.
 _DRIVER_TIER_DEFAULT_BYTES = 64 << 20
 _DRIVER_TIER_MAX_UNITS = 64
 _POSTING_DECODE_BYTES = 16  # int64 doc + int64 tf per decoded posting
@@ -292,10 +312,12 @@ _SEG_COLS = [
 
 
 def _unit_seg_pdf(
-    index_dir: str, unit: int, terms: list[str], part_ids=None
+    index_dir: str, unit: int, terms: list[str], part_ids=None,
+    positions: bool = False,
 ):
     """Driver-side read of one unit's segment rows for ``terms`` -> pandas
-    (same columns the distributed scan selects).
+    (same columns the distributed scan selects, ``positions`` included on
+    request).
 
     ``part_ids``: the lexicon entries' (term -> part_id) pointers for the
     query terms — the term-dictionary -> posting-file indirection. Segment
@@ -335,7 +357,8 @@ def _unit_seg_pdf(
             _SEG_DS_CACHE.pop(next(iter(_SEG_DS_CACHE)))
         _SEG_DS_CACHE[key] = dset
     tab = dset.to_table(
-        columns=_SEG_COLS, filter=ds.field("term").isin(terms)
+        columns=_SEG_COLS + (["positions"] if positions else []),
+        filter=ds.field("term").isin(terms),
     )
     return tab.to_pandas()
 
@@ -655,6 +678,166 @@ def _rows_to_lists(pdf, idfs: dict[str, float]) -> list[dict]:
     ]
 
 
+# ---- the per-unit executor -------------------------------------------------
+
+
+def _no_tombstones(unit):
+    return None
+
+
+def _run_units(
+    spark: SparkSession,
+    index_dir: str,
+    stats: dict,
+    terms: list[str],
+    kernel,
+    *,
+    reduce: str = "topk",
+    k: int | None = None,
+    schema: str = RESULT_SCHEMA,
+    exclude_terms=(),
+    min_present: int = 1,
+    positions: bool = False,
+    tombstones=None,
+    include=None,
+    exclude_docs=None,
+) -> DataFrame:
+    """Run ``kernel`` on every unit holding a query term, then reduce (see
+    the module docstring).
+
+    ``kernel(lists, sidecar, exclude, include)`` -> one array per
+    ``schema`` column. ``lists`` are the unit's positive term lists
+    (``_rows_to_lists``); ``exclude`` holds the sorted ordinals of the
+    unit's tombstoned docs ∪ docs with any ``exclude_terms`` term
+    (bool.must_not: doc-id decode only, no score contribution) ∪
+    ``exclude_docs``, or None; ``include`` the sorted ordinals of the
+    ``include`` docs present in the unit (empty when none is), or None
+    when unfiltered. ``include`` and ``exclude_docs`` are sorted doc_id
+    arrays (broadcast when distributed); ``tombstones`` maps a unit to its
+    tombstoned doc_ids (None: the index's own).
+
+    ``reduce``: "topk" (``schema`` holds doc_id and score; global top-``k``
+    by (score DESC, doc_id ASC)), "term_sum" (``schema`` is (term, score);
+    summed per term, term ASC), or "rows" (every emitted row behind a
+    leading ``unit int`` column; always distributed). The first two run
+    on the driver when ``_driver_tier_ok`` admits the query.
+
+    Fewer than ``min_present`` query terms in the lexicon -> empty."""
+    import numpy as np
+
+    terms = sorted(set(terms))
+    neg_terms = sorted(set(exclude_terms))
+    all_idfs, dfs, parts = _term_stats(
+        spark, index_dir, sorted(set(terms + neg_terms)), stats["n_docs"]
+    )
+    idfs = {t: v for t, v in all_idfs.items() if t in terms}
+    present = sorted(idfs)
+    neg_present = [t for t in neg_terms if t in all_idfs]
+    out_schema = f"unit int, {schema}" if reduce == "rows" else schema
+    if not present or len(present) < min_present:
+        return _local_df(spark, [], out_schema)
+    if tombstones is None:
+        tombstones = _tombstone_excluder(index_dir)
+    read_terms = present + neg_present
+
+    def unit_arrays(u, pdf, include, exclude_docs):
+        sc = _sidecar(index_dir, u)
+        # must-not docs decode as ordinals; doc_id sets translate to them
+        pdf, neg_ords = _split_must_not(pdf, neg_present)
+        ex = _merge_excludes(sc.ords_of_docs(tombstones(u)), neg_ords)
+        if exclude_docs is not None:
+            ex = _merge_excludes(ex, sc.ords_of_docs(exclude_docs))
+        inc = None
+        if include is not None:
+            inc = sc.ords_of_docs(include)
+            if inc is None:  # no filtered doc lives in this unit
+                inc = np.zeros(0, dtype=np.int64)
+        return kernel(_rows_to_lists(pdf, idfs), sc, ex, inc)
+
+    if reduce != "rows" and _driver_tier_ok(stats["units"], dfs, read_terms):
+        up = _unit_part_ids(parts, read_terms, stats["units"])
+
+        def unit_rows(u: int) -> list:
+            if not up[u]:
+                return []
+            pdf = _unit_seg_pdf(
+                index_dir, u, read_terms, part_ids=up[u], positions=positions
+            )
+            if len(pdf) == 0:
+                return []
+            cols = unit_arrays(u, pdf, include, exclude_docs)
+            return list(zip(*(np.asarray(c).tolist() for c in cols)))
+
+        rows = [r for rs in _map_units(stats["units"], unit_rows) for r in rs]
+        if reduce == "topk":
+            return _local_df(spark, _topk_rows(rows, k), schema)
+        sums: dict[str, float] = {}
+        for t, s in rows:
+            sums[t] = sums.get(t, 0.0) + s
+        return _local_df(spark, sorted(sums.items()), schema)
+
+    seg = (
+        _seg_scan(spark, index_dir, stats["units"])
+        .filter(F.col("term").isin(read_terms))
+        .select("unit", *_SEG_COLS, *(["positions"] if positions else []))
+    )
+    bc = None
+    if include is not None or exclude_docs is not None:
+        bc = spark.sparkContext.broadcast((include, exclude_docs))
+    names = [f.strip().split(None, 1)[0] for f in schema.split(",")]
+
+    def score_unit(key, pdf):
+        import pandas as pd
+
+        u = int(key[0])
+        cols = unit_arrays(u, pdf, *(bc.value if bc is not None else (None, None)))
+        out = dict(zip(names, cols))
+        if reduce == "rows":
+            out = {"unit": np.full(len(cols[0]), u, dtype="int32"), **out}
+        return pd.DataFrame(out)
+
+    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=out_schema)
+    if reduce == "rows":
+        return per_unit
+    if reduce == "term_sum":
+        return (
+            per_unit.groupBy("term").agg(F.sum("score").alias("score"))
+            .orderBy(F.asc("term"))
+        )
+    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _drop_stale(spark: SparkSession, index_dir: str, rows: DataFrame) -> DataFrame:
+    """Distributed unit-scoped tombstone anti-join over (unit, doc_id, ...)
+    rows, for tombstone sets too big to ride task closures: a doc is stale
+    in unit u iff some tombstone snapshot is NEWER than u's input snapshot
+    (LSN-as-version semantics, the same rule as the exclude array)."""
+    from .incremental import read_tombstones, unit_snapshots
+
+    tomb_max = (
+        read_tombstones(spark, index_dir)
+        .groupBy("doc_id").agg(F.max("snapshot").alias("__ts"))
+    )
+    usnap_df = spark.createDataFrame(
+        [(int(u), int(s)) for u, s in unit_snapshots(index_dir).items()],
+        "unit int, __us bigint",
+    )
+    return (
+        rows.join(F.broadcast(usnap_df), "unit", "left")
+        .join(tomb_max, "doc_id", "left")
+        .filter(
+            F.col("__ts").isNull()
+            | (F.col("__ts") <= F.coalesce(F.col("__us"), F.lit(0)))
+        )
+        .drop("__ts", "__us")
+    )
+
+
+# diagnostics: which filtered-search tier the last `search` call used
+# ("include" | "exclude-complement" | "escalate") — asserted in tests
+_LAST_FILTER_MODE: str | None = None
+
+
 def search(
     spark: SparkSession,
     index_dir: str,
@@ -683,13 +866,13 @@ def search(
     first, scoring only over survivors), with per-unit emission bounded by
     k — never n_docs. Three tiers by filter cardinality:
 
-    - |filter| <= ``filter_broadcast_limit``: the doc-id set rides a
-      broadcast into the scorers as an ``include`` mask (same mechanism as
-      tombstone ``exclude``); each unit emits its top-k of the filtered
-      docs — exact.
-    - complement small (filter keeps almost everything): broadcast the
-      complement (indexed docs NOT in the filter) merged into the
-      tombstone exclude set — exact, same bound.
+    - |filter| <= ``filter_broadcast_limit``: the doc-id set rides into
+      the scorers as an ``include`` mask (same mechanism as tombstone
+      ``exclude``); each unit emits its top-k of the filtered docs —
+      exact.
+    - complement small (filter keeps almost everything): the complement
+      (indexed docs NOT in the filter) joins the exclude set — exact, same
+      bound.
     - both sides huge (mid-selectivity at extreme scale): escalating
       two-phase — score per-unit top-c (c = 4k, growing 4x), semi-join
       the filter distributively, and accept the global top-k only when
@@ -701,93 +884,60 @@ def search(
     tombstone-corrected at merge time; per-term df still counts superseded
     versions (Lucene deleted-docs-affect-docFreq semantics); tombstoned
     docs are excluded from results either way."""
+    global _LAST_FILTER_MODE
+    import numpy as np
+
     stats = merge.load_stats(index_dir)
     terms = sorted(set(terms))
-    neg_terms = sorted(set(exclude_terms or []))
-    all_idfs, all_dfs, all_parts = _term_stats(
-        spark, index_dir, sorted(set(terms + neg_terms)), stats["n_docs"]
-    )
-    idfs = {t: v for t, v in all_idfs.items() if t in terms}
-    neg_present = [t for t in neg_terms if t in all_idfs]
-    present = sorted(idfs)
-    if not present or (mode == "and" and len(present) < len(terms)):
-        return _local_df(spark, [], RESULT_SCHEMA)
     avgdl = float(stats["avgdl"])
     scorer = wand.score_conjunctive if mode == "and" else wand.STRATEGIES[strategy]
-    excluder, tomb_big = _tombstone_excluder_bounded(
+    tombstones, tomb_big = _tombstone_excluder_bounded(
         index_dir, tombstone_closure_limit
     )
-    n_docs = int(stats["n_docs"])
-
-    if (
-        filter_df is None
-        and not tomb_big
-        and _driver_tier_ok(stats["units"], all_dfs, present + neg_present)
-    ):
-        # small query: score on the driver (same reads, same scorers, same
-        # merge order — bit-identical; see the tier comment above)
-        up = _unit_part_ids(all_parts, present + neg_present, stats["units"])
-
-        def unit_rows(u: int) -> list:
-            if not up[u]:
-                return []
-            pdf = _unit_seg_pdf(
-                index_dir, u, present + neg_present, part_ids=up[u]
-            )
-            if len(pdf) == 0:
-                return []
-            sc = _sidecar(index_dir, u)
-            pdf2, neg_ords = _split_must_not(pdf, neg_present)
-            docs, scores = scorer(
-                _rows_to_lists(pdf2, idfs), avgdl, k, sc,
-                exclude=_merge_excludes(sc.ords_of_docs(excluder(u)), neg_ords),
-            )
-            return list(zip(docs.tolist(), scores.tolist()))
-
-        rows = [r for rs in _map_units(stats["units"], unit_rows) for r in rs]
-        return _local_df(spark, _topk_rows(rows, k), RESULT_SCHEMA)
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(present + neg_present))
-        .select(
-            "unit", "term", "df", "postings",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
+    run = functools.partial(
+        _run_units, spark, index_dir, stats, terms,
+        exclude_terms=exclude_terms or (),
+        min_present=len(terms) if mode == "and" else 1,
     )
 
+    def topk(c):
+        return lambda lists, sc, ex, inc: scorer(
+            lists, avgdl, c, sc, exclude=ex, include=inc
+        )
+
+    fl = filter_df.select("doc_id") if filter_df is not None else None
     if tomb_big:
         # tombstone set beyond the closure limit: unit-scoped exclusion
         # runs as a DISTRIBUTED anti-join over per-unit top-c emissions
         # (escalating until the kth kept score is provably final) — the
         # doc-id array never touches the driver or the task closures
         return _search_escalating(
-            spark, index_dir, seg, idfs, avgdl, scorer, k, n_docs,
-            excluder=None,
-            semi_df=filter_df.select("doc_id") if filter_df is not None else None,
-            tomb_anti=True, neg_terms=neg_present,
+            spark, index_dir, run, topk, k, stats["n_docs"], None, semi_df=fl
         )
+    if fl is None:
+        return run(topk(k), k=k, tombstones=tombstones)
 
-    if filter_df is not None:
-        return _search_filtered(
-            spark, index_dir, seg, idfs, avgdl, scorer, k, excluder,
-            filter_df, filter_broadcast_limit, n_docs, neg_terms=neg_present,
-        )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        sc = _sidecar(index_dir, key[0])
-        # neg docs decode as ordinals; tombstone doc_ids translate to them
-        pdf, neg_ords = _split_must_not(pdf, neg_present)
-        docs, scores = scorer(
-            _rows_to_lists(pdf, idfs), avgdl, k, sc,
-            exclude=_merge_excludes(sc.ords_of_docs(excluder(key[0])), neg_ords),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    ids_pdf = fl.limit(filter_broadcast_limit + 1).toPandas()
+    if len(ids_pdf) <= filter_broadcast_limit:
+        _LAST_FILTER_MODE = "include"
+        include = np.unique(ids_pdf["doc_id"].to_numpy(dtype="int64"))
+        return run(topk(k), k=k, tombstones=tombstones, include=include)
+    # filter too big to broadcast — is its COMPLEMENT (within the indexed
+    # docs) small? A keep-almost-everything filter excludes few docs.
+    comp_pdf = (
+        _docs_scan(spark, index_dir, stats["units"]).select("doc_id")
+        .join(fl, "doc_id", "left_anti")
+        .limit(filter_broadcast_limit + 1).toPandas()
+    )
+    if len(comp_pdf) <= filter_broadcast_limit:
+        _LAST_FILTER_MODE = "exclude-complement"
+        comp = np.unique(comp_pdf["doc_id"].to_numpy(dtype="int64"))
+        return run(topk(k), k=k, tombstones=tombstones, exclude_docs=comp)
+    _LAST_FILTER_MODE = "escalate"
+    return _search_escalating(
+        spark, index_dir, run, topk, k, stats["n_docs"], tombstones,
+        semi_df=fl,
+    )
 
 
 def search_after(
@@ -812,218 +962,40 @@ def search_after(
     depth. Cursor equality is reliable because page N's scores were
     computed by this same accumulation order (bit-identical floats)."""
     stats = merge.load_stats(index_dir)
-    terms = sorted(set(terms))
-    neg_terms = sorted(set(exclude_terms or []))
-    all_idfs, all_dfs, all_parts = _term_stats(
-        spark, index_dir, sorted(set(terms + neg_terms)), stats["n_docs"]
-    )
-    idfs = {t: v for t, v in all_idfs.items() if t in terms}
-    neg_present = [t for t in neg_terms if t in all_idfs]
-    present = sorted(idfs)
-    if not present:
-        return _local_df(spark, [], RESULT_SCHEMA)
     avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
     cursor = (float(after[0]), int(after[1]))
-
-    if _driver_tier_ok(stats["units"], all_dfs, present + neg_present):
-        # small query: driver tier (same scorer, same cursor mask — the
-        # tier comment near the top of this module)
-        up = _unit_part_ids(all_parts, present + neg_present, stats["units"])
-
-        def unit_rows(u: int) -> list:
-            if not up[u]:
-                return []
-            pdf = _unit_seg_pdf(
-                index_dir, u, present + neg_present, part_ids=up[u]
-            )
-            if len(pdf) == 0:
-                return []
-            sc = _sidecar(index_dir, u)
-            pdf2, neg_ords = _split_must_not(pdf, neg_present)
-            docs, scores = wand.score_exhaustive_after(
-                _rows_to_lists(pdf2, idfs), avgdl, k, sc, cursor,
-                exclude=_merge_excludes(sc.ords_of_docs(excluder(u)), neg_ords),
-            )
-            return list(zip(docs.tolist(), scores.tolist()))
-
-        rows = [r for rs in _map_units(stats["units"], unit_rows) for r in rs]
-        return _local_df(spark, _topk_rows(rows, k), RESULT_SCHEMA)
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(present + neg_present))
-        .select(
-            "unit", "term", "df", "postings",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
-    )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        sc = _sidecar(index_dir, key[0])
-        pdf, neg_ords = _split_must_not(pdf, neg_present)
-        docs, scores = wand.score_exhaustive_after(
-            _rows_to_lists(pdf, idfs), avgdl, k, sc, cursor,
-            exclude=_merge_excludes(sc.ords_of_docs(excluder(key[0])), neg_ords),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-UNIT_RESULT_SCHEMA = "unit int, doc_id bigint, score double"
-
-
-# diagnostics: which filtered-search tier the last `search` call used
-# ("include" | "exclude-complement" | "escalate") — asserted in tests
-_LAST_FILTER_MODE: str | None = None
-
-
-def _search_filtered(
-    spark, index_dir, seg, idfs, avgdl, scorer, k, excluder,
-    filter_df, broadcast_limit, n_docs, neg_terms=(),
-):
-    """Filtered search tiers (see ``search`` docstring). Returns the final
-    top-k DataFrame; every tier bounds per-unit scorer emission to <= the
-    current candidate count (k, or c during escalation), never n_docs."""
-    global _LAST_FILTER_MODE
-    import numpy as np
-
-    fl = filter_df.select("doc_id")
-    ids_pdf = fl.limit(broadcast_limit + 1).toPandas()
-    if len(ids_pdf) <= broadcast_limit:
-        _LAST_FILTER_MODE = "include"
-        include = np.unique(ids_pdf["doc_id"].to_numpy(dtype="int64"))
-        inc_bc = spark.sparkContext.broadcast(include)
-
-        def score_inc(key, pdf):
-            import pandas as pd
-
-            sc = _sidecar(index_dir, key[0])
-            pdf, neg_ords = _split_must_not(pdf, neg_terms)
-            inc = sc.ords_of_docs(inc_bc.value)
-            if inc is None:  # no filtered doc lives in this unit
-                inc = np.zeros(0, dtype=np.int64)
-            docs, scores = scorer(
-                _rows_to_lists(pdf, idfs), avgdl, k, sc,
-                exclude=_merge_excludes(sc.ords_of_docs(excluder(key[0])), neg_ords),
-                include=inc,
-            )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        per_unit = seg.groupBy("unit").applyInPandas(score_inc, schema=RESULT_SCHEMA)
-        # filter already applied inside the scorers — no semi-join needed
-        return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    # filter too big to broadcast — is its COMPLEMENT (within the indexed
-    # docs) small? A keep-almost-everything filter excludes few docs.
-    docs_all = _docs_scan(
-        spark, index_dir, merge.load_stats(index_dir)["units"]
-    ).select("doc_id")
-    comp_pdf = (
-        docs_all.join(fl, "doc_id", "left_anti").limit(broadcast_limit + 1).toPandas()
-    )
-    if len(comp_pdf) <= broadcast_limit:
-        _LAST_FILTER_MODE = "exclude-complement"
-        comp = np.unique(comp_pdf["doc_id"].to_numpy(dtype="int64"))
-        comp_bc = spark.sparkContext.broadcast(comp)
-
-        def score_exc(key, pdf):
-            import pandas as pd
-
-            sc = _sidecar(index_dir, key[0])
-            pdf, neg_ords = _split_must_not(pdf, neg_terms)
-            ex = _merge_excludes(
-                _merge_excludes(sc.ords_of_docs(excluder(key[0])), neg_ords),
-                sc.ords_of_docs(comp_bc.value),
-            )
-            docs, scores = scorer(
-                _rows_to_lists(pdf, idfs), avgdl, k, sc, exclude=ex,
-            )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
-
-        per_unit = seg.groupBy("unit").applyInPandas(score_exc, schema=RESULT_SCHEMA)
-        return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    # escalating two-phase (shared with the big-tombstone path)
-    _LAST_FILTER_MODE = "escalate"
-    return _search_escalating(
-        spark, index_dir, seg, idfs, avgdl, scorer, k, n_docs,
-        excluder=excluder, semi_df=fl, neg_terms=neg_terms,
+    return _run_units(
+        spark, index_dir, stats, terms,
+        lambda lists, sc, ex, inc: wand.score_exhaustive_after(
+            lists, avgdl, k, sc, cursor, exclude=ex, include=inc
+        ),
+        k=k, exclude_terms=exclude_terms or (),
     )
 
 
 def _search_escalating(
-    spark, index_dir, seg, idfs, avgdl, scorer, k, n_docs,
-    excluder=None, semi_df=None, tomb_anti=False, neg_terms=(),
+    spark, index_dir, run, topk, k, n_docs, tombstones, semi_df=None,
 ):
-    """Escalating two-phase top-k: per-unit top-c, distributed
-    semi-join (metadata filter) and/or unit-scoped tombstone ANTI-join,
-    accept only when the kth kept score strictly beats the best possible
-    unemitted score (each non-exhausted unit's lowest emitted score
-    upper-bounds everything it did not emit) — else c escalates 4x.
-    Exact at every exit; no doc-id set ever rides a closure."""
-    import numpy as np
-
-    tomb_max = usnap_df = None
-    if tomb_anti:
-        from .incremental import read_tombstones, unit_snapshots
-
-        tomb = read_tombstones(spark, index_dir)
-        tomb_max = tomb.groupBy("doc_id").agg(F.max("snapshot").alias("__ts"))
-        usnap_df = spark.createDataFrame(
-            [(int(u), int(s)) for u, s in unit_snapshots(index_dir).items()],
-            "unit int, __us bigint",
-        )
-
-    def make_score_c(_c):
-        def score_c(key, pdf):
-            import pandas as pd
-
-            sc = _sidecar(index_dir, key[0])
-            pdf, neg_ords = _split_must_not(pdf, neg_terms)
-            ex = (
-                sc.ords_of_docs(excluder(key[0])) if excluder is not None else None
-            )
-            docs, scores = scorer(
-                _rows_to_lists(pdf, idfs), avgdl, _c, sc,
-                exclude=_merge_excludes(ex, neg_ords),
-            )
-            return pd.DataFrame(
-                {"unit": np.full(docs.size, key[0], dtype="int32"),
-                 "doc_id": docs, "score": scores}
-            )
-
-        return score_c
-
+    """Escalating two-phase top-k: per-unit top-c (``run`` with the
+    ``topk(c)`` kernel, all rows kept), distributed semi-join (metadata
+    filter) and — when ``tombstones`` is None, i.e. the set is too big
+    for closures — the unit-scoped tombstone ANTI-join; accept only when
+    the kth kept score strictly beats the best possible unemitted score
+    (each non-exhausted unit's lowest emitted score upper-bounds
+    everything it did not emit) — else c escalates 4x. Exact at every
+    exit; no doc-id set ever rides a closure."""
     c = max(4 * k, 64)
     while True:
-        score_c = make_score_c(c)
-        per_unit = (
-            seg.groupBy("unit")
-            .applyInPandas(score_c, schema=UNIT_RESULT_SCHEMA)
-            .persist()
-        )
+        per_unit = run(
+            topk(c), reduce="rows", tombstones=tombstones or _no_tombstones
+        ).persist()
         try:
             bounds = per_unit.groupBy("unit").agg(
                 F.count(F.lit(1)).alias("n"), F.min("score").alias("min_s")
             ).collect()
             kept = per_unit
-            if tomb_anti:
-                # a doc is stale in unit u iff some tombstone snapshot is
-                # NEWER than u's input snapshot (LSN-as-version semantics)
-                kept = (
-                    kept.join(F.broadcast(usnap_df), "unit", "left")
-                    .join(tomb_max, "doc_id", "left")
-                    .filter(
-                        F.col("__ts").isNull()
-                        | (F.col("__ts") <= F.coalesce(F.col("__us"), F.lit(0)))
-                    )
-                    .drop("__ts", "__us")
-                )
+            if tombstones is None:
+                kept = _drop_stale(spark, index_dir, kept)
             if semi_df is not None:
                 kept = kept.join(semi_df, "doc_id", "left_semi")
             top = (
@@ -1268,6 +1240,45 @@ def search_multifield(
     return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+def _multifield_expanded(spark, field_indexes, expand, k, boosts) -> DataFrame:
+    """Expand a pattern against EVERY field's lexicon (``expand(index_dir)
+    -> terms``), union the expansions and score the union with the
+    sum-fused ``search_multifield`` — a term contributes in each field
+    where it exists (per-field idf/df handle absence naturally)."""
+    if isinstance(field_indexes, str):
+        field_indexes = discover_fields(field_indexes)
+    terms = sorted({t for d in field_indexes.values() for t in expand(d)})
+    if not terms:
+        return _local_df(spark, [], RESULT_SCHEMA)
+    return search_multifield(spark, field_indexes, terms, k, boosts=boosts)
+
+
+def _multifield_max_fused(spark, field_indexes, per_field, k, boosts) -> DataFrame:
+    """Best-fields (max) fusion of per-field top-k's: score(d) = max_f
+    boost_f * score_f(d), ``per_field(index_dir)`` giving each field's
+    (doc_id, score) top-k.
+
+    Exact despite the per-field truncation: if doc d belongs to the true
+    fused top-k then in its argmax field fewer than k docs score above it
+    — so d IS in that field's exact top-k (any doc above it there also
+    out-ranks it globally). Fusing the per-field top-k's loses nothing."""
+    if isinstance(field_indexes, str):
+        field_indexes = discover_fields(field_indexes)
+    boosts = {f: 1.0 for f in field_indexes} | (boosts or {})
+    u = None
+    for f in sorted(field_indexes):
+        part = per_field(field_indexes[f]).select(
+            "doc_id", (F.col("score") * F.lit(float(boosts[f]))).alias("score")
+        )
+        u = part if u is None else u.unionByName(part)
+    return (
+        u.groupBy("doc_id")
+        .agg(F.max("score").alias("score"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
+
+
 def search_multifield_prefix(
     spark: SparkSession,
     field_indexes: dict[str, str] | str,
@@ -1279,21 +1290,11 @@ def search_multifield_prefix(
     """Prefix query over a multi-field index (OpenSearch multi_match
     phrase_prefix/bool_prefix family): the prefix expands against EVERY
     field's lexicon (each a driver-side range scan), the expansions union,
-    and the union scores through the standard sum-fused multifield BM25 —
-    a term contributes in each field where it exists (per-field idf/df
-    handle absence naturally)."""
-    if isinstance(field_indexes, str):
-        field_indexes = discover_fields(field_indexes)
-    terms = sorted(
-        {
-            t
-            for d in field_indexes.values()
-            for t in expand_prefix(d, prefix, max_expansions)
-        }
+    and the union scores through the standard sum-fused multifield BM25."""
+    return _multifield_expanded(
+        spark, field_indexes,
+        lambda d: expand_prefix(d, prefix, max_expansions), k, boosts,
     )
-    if not terms:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    return search_multifield(spark, field_indexes, terms, k, boosts=boosts)
 
 
 def search_multifield_wildcard(
@@ -1306,18 +1307,10 @@ def search_multifield_wildcard(
 ) -> DataFrame:
     """Wildcard query over a multi-field index: per-field lexicon
     expansion (streamed regex verify), union, sum-fused multifield BM25."""
-    if isinstance(field_indexes, str):
-        field_indexes = discover_fields(field_indexes)
-    terms = sorted(
-        {
-            t
-            for d in field_indexes.values()
-            for t in expand_wildcard(d, pattern, max_expansions)
-        }
+    return _multifield_expanded(
+        spark, field_indexes,
+        lambda d: expand_wildcard(d, pattern, max_expansions), k, boosts,
     )
-    if not terms:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    return search_multifield(spark, field_indexes, terms, k, boosts=boosts)
 
 
 def search_multifield_regexp(
@@ -1331,18 +1324,10 @@ def search_multifield_regexp(
     """Regexp query over a multi-field index: per-field anchored-regex
     lexicon expansion, union, sum-fused multifield BM25 (same shape as
     the multifield wildcard path)."""
-    if isinstance(field_indexes, str):
-        field_indexes = discover_fields(field_indexes)
-    terms = sorted(
-        {
-            t
-            for d in field_indexes.values()
-            for t in expand_regexp(d, pattern, max_expansions)
-        }
+    return _multifield_expanded(
+        spark, field_indexes,
+        lambda d: expand_regexp(d, pattern, max_expansions), k, boosts,
     )
-    if not terms:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    return search_multifield(spark, field_indexes, terms, k, boosts=boosts)
 
 
 def search_multifield_phrase(
@@ -1358,37 +1343,15 @@ def search_multifield_phrase(
     the phrase occurs in ANY field; its score is
     ``max_f boost_f * phrase_BM25_f`` (requires each field built
     ``with_positions=True``; ``slop`` > 0 uses the ordered-window
-    proximity semantics per field).
-
-    Exact despite per-field top-k truncation: under max-fusion, if doc d
-    belongs to the true fused top-k then in its argmax field fewer than k
-    docs score above it — so d IS in that field's exact top-k (any doc
-    above it there also out-ranks it globally). Fusing the per-field
-    global top-k's therefore loses nothing."""
-    if isinstance(field_indexes, str):
-        field_indexes = discover_fields(field_indexes)
-    boosts = {f: 1.0 for f in field_indexes} | (boosts or {})
-    parts = []
-    for f in sorted(field_indexes):
-        res = (
-            search_phrase(spark, field_indexes[f], phrase, k)
+    proximity semantics per field). Exact: see ``_multifield_max_fused``."""
+    return _multifield_max_fused(
+        spark, field_indexes,
+        lambda d: (
+            search_phrase(spark, d, phrase, k)
             if slop == 0
-            else search_proximity(spark, field_indexes[f], phrase, slop, k)
-        )
-        parts.append(
-            res.select(
-                "doc_id",
-                (F.col("score") * F.lit(float(boosts[f]))).alias("score"),
-            )
-        )
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    return (
-        u.groupBy("doc_id")
-        .agg(F.max("score").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+            else search_proximity(spark, d, phrase, slop, k)
+        ),
+        k, boosts,
     )
 
 
@@ -1403,29 +1366,14 @@ def search_multifield_phrase_prefix(
     """match_phrase_prefix over a multi-field index (multi_match ``type:
     phrase_prefix``, best_fields/max fusion): the last phrase word expands
     against EACH field's own lexicon; a doc matches if any field matches;
-    score = ``max_f boost_f * phrase_prefix_BM25_f``. Exactness under
-    per-field top-k truncation follows the same argmax-field argument as
-    ``search_multifield_phrase``."""
-    if isinstance(field_indexes, str):
-        field_indexes = discover_fields(field_indexes)
-    boosts = {f: 1.0 for f in field_indexes} | (boosts or {})
-    parts = [
-        search_phrase_prefix(
-            spark, field_indexes[f], phrase, k, max_expansions=max_expansions
-        ).select(
-            "doc_id",
-            (F.col("score") * F.lit(float(boosts[f]))).alias("score"),
-        )
-        for f in sorted(field_indexes)
-    ]
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    return (
-        u.groupBy("doc_id")
-        .agg(F.max("score").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    score = ``max_f boost_f * phrase_prefix_BM25_f``. Exact: see
+    ``_multifield_max_fused``."""
+    return _multifield_max_fused(
+        spark, field_indexes,
+        lambda d: search_phrase_prefix(
+            spark, d, phrase, k, max_expansions=max_expansions
+        ),
+        k, boosts,
     )
 
 
@@ -1465,41 +1413,18 @@ def expand_prefix(
 # ---- distributed expansion tier -------------------------------------------
 # An UNPRUNED expansion (fuzzy with prefix_length=0, leading-* wildcard,
 # unanchorable regexp) must pass the whole lexicon through the matcher.
-# Below this byte bound the term-sorted lexicon streams through the driver
-# (pyarrow, no job — fine for lexicons up to tens of MB); above it the
-# same matcher runs as a small Spark job (mapInArrow over the lexicon
-# parquet, same pyarrow/numpy kernels, executors each matching their
-# split), and only the capped match list is collected. The gate is file
-# bytes — known before reading anything.
-_EXPAND_DRIVER_DEFAULT_BYTES = 64 << 20
-
-
-def _expand_driver_cap() -> int:
-    import os as _os
-
-    try:
-        return int(
-            _os.environ.get(
-                "PGSPARK_EXPAND_DRIVER_BYTES", _EXPAND_DRIVER_DEFAULT_BYTES
-            )
-        )
-    except ValueError:
-        return _EXPAND_DRIVER_DEFAULT_BYTES
-
-
-def _lexicon_files(index_dir: str) -> list[str]:
-    import glob as _glob
-    import os as _os
-
-    return sorted(
-        _glob.glob(_os.path.join(merge.lexicon_path(index_dir), "*.parquet"))
-    )
+# Within the driver byte budget (``_driver_tier_cap``) the term-sorted
+# lexicon streams through the driver (pyarrow, no job — fine for lexicons
+# up to tens of MB); above it the same matcher runs as a small Spark job
+# (mapInArrow over the lexicon parquet, same pyarrow/numpy kernels,
+# executors each matching their split), and only the capped match list is
+# collected. The gate is file bytes — known before reading anything.
 
 
 def _expand_needs_job(files: list[str]) -> bool:
     import os as _os
 
-    cap = _expand_driver_cap()
+    cap = _driver_tier_cap()
     if cap <= 0:
         return True
     return sum(_os.path.getsize(f) for f in files) > cap
@@ -1907,21 +1832,45 @@ def search_multifield_fuzzy(
     """Fuzzy query over a multi-field index: per-field lexicon expansion,
     union, sum-fused multifield BM25 (the multi_match + fuzziness
     shape)."""
-    if isinstance(field_indexes, str):
-        field_indexes = discover_fields(field_indexes)
-    terms = sorted(
-        {
-            t
-            for d in field_indexes.values()
-            for t in expand_fuzzy(
-                d, term, max_edits, max_expansions, prefix_length,
-                transpositions,
-            )
-        }
+    return _multifield_expanded(
+        spark, field_indexes,
+        lambda d: expand_fuzzy(
+            d, term, max_edits, max_expansions, prefix_length, transpositions
+        ),
+        k, boosts,
     )
-    if not terms:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    return search_multifield(spark, field_indexes, terms, k, boosts=boosts)
+
+
+def _slot_lists(lists: list[dict], slots: list[list[str]]) -> list[list[dict]]:
+    """A unit's term lists grouped into positional slots — a slot is a
+    LIST of terms, any of which continues the chain. Repeated phrase words
+    share the same list objects (the scorers dedup them by identity)."""
+    by_term: dict[str, list[dict]] = {}
+    for lst in lists:
+        by_term.setdefault(lst["term"], []).append(lst)
+    return [[l for t in slot for l in by_term.get(t, [])] for slot in slots]
+
+
+def _run_positional(spark, index_dir, slots, k, score) -> DataFrame:
+    """Positional kernel ``score(slot_lists, avgdl, sidecar, exclude)``
+    over ``slots`` (every slot term must be in the lexicon) ->
+    DataFrame(doc_id, score): top-k, or with k=None every match,
+    un-ordered and un-limited (a live doc exists in exactly one unit, so
+    the union needs no dedup) — the rescore building block."""
+    stats = merge.load_stats(index_dir)
+    avgdl = float(stats["avgdl"])
+    terms = sorted({t for slot in slots for t in slot})
+
+    def kernel(lists, sc, ex, inc):
+        return score(_slot_lists(lists, slots), avgdl, sc, ex)
+
+    run = functools.partial(
+        _run_units, spark, index_dir, stats, terms, kernel,
+        min_present=len(terms), positions=True,
+    )
+    if k is None:
+        return run(reduce="rows").select("doc_id", "score")
+    return run(k=k)
 
 
 def search_phrase(
@@ -1936,47 +1885,14 @@ def search_phrase(
     positions p, p+1, ..., the Lucene match_phrase semantics the reference
     gets from its OpenSearch text fields, opensearch_mapper.go:17-68);
     matching docs are ranked by BM25 over the phrase's distinct terms.
-    -> DataFrame(doc_id, score), (score DESC, doc_id ASC)."""
-    stats = merge.load_stats(index_dir)
-    uniq_terms = sorted(set(phrase))
-    idfs = _term_idfs(spark, index_dir, uniq_terms, stats["n_docs"])
-    if len(idfs) < len(uniq_terms) or not phrase:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
-    phrase_order = list(phrase)
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(uniq_terms))
-        .select(
-            "unit", "term", "df", "postings", "positions",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
+    -> DataFrame(doc_id, score), (score DESC, doc_id ASC); k=None returns
+    every match, unordered."""
+    return _run_positional(
+        spark, index_dir, [[t] for t in phrase], k,
+        lambda slot_lists, avgdl, sc, ex: wand.score_phrase(
+            slot_lists, avgdl, k, sc, exclude=ex
+        ),
     )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        lists = _rows_to_lists(pdf, idfs)
-        by_term: dict[str, list[dict]] = {}
-        for lst in lists:
-            by_term.setdefault(lst["term"], []).append(lst)
-        slot_lists = [by_term.get(t, []) for t in phrase_order]
-        sc = _sidecar(index_dir, key[0])
-        docs, scores = wand.score_phrase(
-            slot_lists, avgdl, k, sc,
-            exclude=sc.ords_of_docs(excluder(key[0])),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    if k is None:
-        # every phrase match, un-ordered and un-limited (a live doc exists
-        # in exactly one unit, so the union needs no dedup) — the rescore
-        # building block
-        return per_unit
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def search_phrase_prefix(
@@ -2002,50 +1918,16 @@ def search_phrase_prefix(
     -> DataFrame(doc_id, score), (score DESC, doc_id ASC)."""
     if not phrase:
         return _local_df(spark, [], RESULT_SCHEMA)
-    exact = list(phrase[:-1])
     expansions = expand_prefix(index_dir, phrase[-1], max_expansions)
     if not expansions:
         return _local_df(spark, [], RESULT_SCHEMA)
-    stats = merge.load_stats(index_dir)
-    uniq_terms = sorted(set(exact) | set(expansions))
-    idfs = _term_idfs(spark, index_dir, uniq_terms, stats["n_docs"])
-    if any(t not in idfs for t in exact):
-        return _local_df(spark, [], RESULT_SCHEMA)
-    avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
-    expansion_set = sorted(set(expansions))
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(uniq_terms))
-        .select(
-            "unit", "term", "df", "postings", "positions",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
+    return _run_positional(
+        spark, index_dir, [[t] for t in phrase[:-1]] + [sorted(set(expansions))],
+        k,
+        lambda slot_lists, avgdl, sc, ex: wand.score_phrase(
+            slot_lists, avgdl, k, sc, exclude=ex
+        ),
     )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        lists = _rows_to_lists(pdf, idfs)
-        by_term: dict[str, list[dict]] = {}
-        for lst in lists:
-            by_term.setdefault(lst["term"], []).append(lst)
-        last_slot: list[dict] = []
-        for t in expansion_set:
-            last_slot.extend(by_term.get(t, []))
-        slot_lists = [by_term.get(t, []) for t in exact] + [last_slot]
-        sc = _sidecar(index_dir, key[0])
-        docs, scores = wand.score_phrase(
-            slot_lists, avgdl, k, sc,
-            exclude=sc.ords_of_docs(excluder(key[0])),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    if k is None:
-        return per_unit
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def search_min_should_match(
@@ -2060,36 +1942,15 @@ def search_min_should_match(
     + minimum_should_match; m=1 is pure OR, m=len(terms) is AND).
     -> DataFrame(doc_id, score), (score DESC, doc_id ASC)."""
     stats = merge.load_stats(index_dir)
-    terms = sorted(set(terms))
-    idfs = _term_idfs(spark, index_dir, terms, stats["n_docs"])
-    present = sorted(idfs)
-    m = max(1, int(min_should_match))
-    if len(present) < m:
-        return _local_df(spark, [], RESULT_SCHEMA)
     avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(present))
-        .select(
-            "unit", "term", "df", "postings",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
+    m = max(1, int(min_should_match))
+    return _run_units(
+        spark, index_dir, stats, terms,
+        lambda lists, sc, ex, inc: wand.score_min_should(
+            lists, avgdl, k, m, sc, exclude=ex, include=inc
+        ),
+        k=k, min_present=m,
     )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        sc = _sidecar(index_dir, key[0])
-        docs, scores = wand.score_min_should(
-            _rows_to_lists(pdf, idfs), avgdl, k, m,
-            sc, exclude=sc.ords_of_docs(excluder(key[0])),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def search_proximity(
@@ -2103,41 +1964,12 @@ def search_proximity(
     each phrase word must follow the previous within ``slop`` intervening
     tokens (slop=0 = exact phrase — the ordered variant of Lucene's sloppy
     match_phrase). -> DataFrame(doc_id, score), (score DESC, doc_id ASC)."""
-    stats = merge.load_stats(index_dir)
-    uniq_terms = sorted(set(phrase))
-    idfs = _term_idfs(spark, index_dir, uniq_terms, stats["n_docs"])
-    if len(idfs) < len(uniq_terms) or not phrase:
-        return _local_df(spark, [], RESULT_SCHEMA)
-    avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
-    phrase_order = list(phrase)
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(uniq_terms))
-        .select(
-            "unit", "term", "df", "postings", "positions",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
+    return _run_positional(
+        spark, index_dir, [[t] for t in phrase], k,
+        lambda slot_lists, avgdl, sc, ex: wand.score_proximity(
+            slot_lists, avgdl, k, sc, slop=slop, exclude=ex
+        ),
     )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        lists = _rows_to_lists(pdf, idfs)
-        by_term: dict[str, list[dict]] = {}
-        for lst in lists:
-            by_term.setdefault(lst["term"], []).append(lst)
-        slot_lists = [by_term.get(t, []) for t in phrase_order]
-        sc = _sidecar(index_dir, key[0])
-        docs, scores = wand.score_proximity(
-            slot_lists, avgdl, k, sc,
-            slop=slop, exclude=sc.ords_of_docs(excluder(key[0])),
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    per_unit = seg.groupBy("unit").applyInPandas(score_unit, schema=RESULT_SCHEMA)
-    return per_unit.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 MATCH_SCHEMA = "doc_id bigint, n_matched int"
@@ -2157,31 +1989,16 @@ def match_docs(
     doc ids only, no driver collect."""
     terms = sorted(set(terms))
     need = len(terms) if mode == "and" else max(1, int(min_should_match))
-    excluder = _tombstone_excluder(index_dir)
-    seg = (
-        _seg_scan(spark, index_dir, merge.load_stats(index_dir)["units"])
-        .filter(F.col("term").isin(terms))
-        .select("unit", "term", "df", "postings")
-    )
 
-    def match_unit(key, pdf):
-        import pandas as pd
-
-        lists = [
-            {"term": r.term, "df": int(r.df), "postings": r.postings}
-            for r in pdf.itertuples()
-        ]
-        sc = _sidecar(index_dir, key[0])
-        ords, counts = wand.match_doc_counts(
-            lists, exclude=sc.ords_of_docs(excluder(key[0]))
-        )
+    def kernel(lists, sc, ex, inc):
+        ords, counts = wand.match_doc_counts(lists, exclude=ex)
         keep = counts >= need
-        return pd.DataFrame(
-            {"doc_id": sc.doc_of(ords[keep]),
-             "n_matched": counts[keep].astype("int32")}
-        )
+        return sc.doc_of(ords[keep]), counts[keep].astype("int32")
 
-    return seg.groupBy("unit").applyInPandas(match_unit, schema=MATCH_SCHEMA)
+    return _run_units(
+        spark, index_dir, merge.load_stats(index_dir), terms, kernel,
+        reduce="rows", schema=MATCH_SCHEMA, min_present=need,
+    ).select("doc_id", "n_matched")
 
 
 def search_facets(
@@ -2489,55 +2306,34 @@ def explain_score(
     per-term BM25 contribution of ``doc_id`` for this query ->
     DataFrame(term, score), term ASC; the sum equals the doc's ``search``
     score bit-exactly (same decode + weight path, ``_decoded_contribs``
-    with an include mask of just this doc). Distributed the same way as
-    search — every unit probes its sidecar for the doc (tombstone-aware),
-    emission <= |terms| rows total."""
+    with an include mask of just this doc). Every unit probes its sidecar
+    for the doc (tombstone-aware); emission <= |terms| rows total."""
     import numpy as np
 
     stats = merge.load_stats(index_dir)
-    idfs = _term_idfs(spark, index_dir, sorted(set(terms)), stats["n_docs"])
-    present = sorted(idfs)
-    if not present:
-        return spark.createDataFrame([], EXPLAIN_SCHEMA)
     avgdl = float(stats["avgdl"])
-    excluder = _tombstone_excluder(index_dir)
-    target = int(doc_id)
+    target = np.array([int(doc_id)], dtype=np.int64)
 
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(present))
-        .select(
-            "unit", "term", "df", "postings",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
-    )
-
-    def explain_unit(key, pdf):
-        import pandas as pd
-
-        sc = _sidecar(index_dir, key[0])
+    def kernel(lists, sc, ex, inc):
         # None = doc not in this unit (ords_of_docs drops absent ids)
-        ords = sc.ords_of_docs(np.array([target], dtype=np.int64))
+        ords = sc.ords_of_docs(target)
         out_t, out_s = [], []
-        if ords is not None and ords.size:
-            tomb = sc.ords_of_docs(excluder(key[0]))
-            for lst in _rows_to_lists(pdf, idfs):
+        if ords is not None:
+            for lst in lists:
                 doc, contrib = wand._decoded_contribs(
-                    lst, avgdl, sc, exclude=tomb, include=ords
+                    lst, avgdl, sc, exclude=ex, include=ords
                 )
                 if doc.size:
                     out_t.append(lst["term"])
                     out_s.append(float(contrib[0]))
-        return pd.DataFrame({"term": pd.array(out_t, dtype="string"),
-                             "score": pd.array(out_s, dtype="float64")})
+        return np.array(out_t, dtype=object), np.array(out_s, dtype=np.float64)
 
-    per_unit = seg.groupBy("unit").applyInPandas(explain_unit, schema=EXPLAIN_SCHEMA)
     # salted head terms hold one row per salt; a superseded doc version in
-    # an older unit is tombstone-excluded above — the per-term sum is the
-    # doc's live contribution
-    return (
-        per_unit.groupBy("term").agg(F.sum("score").alias("score"))
-        .orderBy(F.asc("term"))
+    # an older unit is tombstone-excluded — the per-term sum is the doc's
+    # live contribution
+    return _run_units(
+        spark, index_dir, stats, terms, kernel,
+        reduce="term_sum", schema=EXPLAIN_SCHEMA,
     )
 
 
@@ -2795,67 +2591,22 @@ def score_all_matches(
     the query terms' posting lists, which any scorer does anyway; no
     driver collect, no closure-borne doc sets. Tombstone sets beyond
     ``tombstone_closure_limit`` are removed by a DISTRIBUTED unit-scoped
-    anti-join on the emitted rows (LSN-as-version semantics, same
-    predicate as ``_search_escalating``)."""
-    import numpy as np
-
+    anti-join on the emitted rows (``_drop_stale``)."""
     stats = merge.load_stats(index_dir)
-    terms = sorted(set(terms))
-    idfs = _term_idfs(spark, index_dir, terms, stats["n_docs"])
-    present = sorted(idfs)
-    if not present:
-        return _local_df(spark, [], RESULT_SCHEMA)
     avgdl = float(stats["avgdl"])
-    excluder, tomb_big = _tombstone_excluder_bounded(
+    tombstones, tomb_big = _tombstone_excluder_bounded(
         index_dir, tombstone_closure_limit
     )
-
-    seg = (
-        _seg_scan(spark, index_dir, stats["units"])
-        .filter(F.col("term").isin(present))
-        .select(
-            "unit", "term", "df", "postings",
-            "block_last_doc", "block_max_tf", "block_min_dl", "block_offset",
-        )
-    )
-
-    def score_unit(key, pdf):
-        import pandas as pd
-
-        sc = _sidecar(index_dir, key[0])
-        ex = None if tomb_big else sc.ords_of_docs(excluder(key[0]))
-        docs, scores = wand.score_exhaustive(
-            _rows_to_lists(pdf, idfs), avgdl, None, sc, exclude=ex
-        )
-        return pd.DataFrame(
-            {"unit": np.full(docs.size, key[0], dtype="int32"),
-             "doc_id": docs, "score": scores}
-        )
-
-    per_unit = seg.groupBy("unit").applyInPandas(
-        score_unit, schema=UNIT_RESULT_SCHEMA
+    rows = _run_units(
+        spark, index_dir, stats, terms,
+        lambda lists, sc, ex, inc: wand.score_exhaustive(
+            lists, avgdl, None, sc, exclude=ex
+        ),
+        reduce="rows", tombstones=_no_tombstones if tomb_big else tombstones,
     )
     if tomb_big:
-        from .incremental import read_tombstones, unit_snapshots
-
-        tomb_max = (
-            read_tombstones(spark, index_dir)
-            .groupBy("doc_id").agg(F.max("snapshot").alias("__ts"))
-        )
-        usnap_df = spark.createDataFrame(
-            [(int(u), int(s)) for u, s in unit_snapshots(index_dir).items()],
-            "unit int, __us bigint",
-        )
-        per_unit = (
-            per_unit.join(F.broadcast(usnap_df), "unit", "left")
-            .join(tomb_max, "doc_id", "left")
-            .filter(
-                F.col("__ts").isNull()
-                | (F.col("__ts") <= F.coalesce(F.col("__us"), F.lit(0)))
-            )
-            .drop("__ts", "__us")
-        )
-    return per_unit.select("doc_id", "score")
+        rows = _drop_stale(spark, index_dir, rows)
+    return rows.select("doc_id", "score")
 
 
 def search_collapse(

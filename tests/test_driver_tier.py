@@ -2,7 +2,7 @@
 the distributed path, and a gate that actually gates.
 
 The tier runs a bounded-size query entirely on the driver (same pyarrow
-term-IN segment read, same wand scorers, same merge order); everything
+term-IN segment read, same per-unit kernel, same merge order); everything
 over PGSPARK_QUERY_DRIVER_BYTES takes the distributed path unchanged.
 """
 
@@ -58,6 +58,85 @@ def test_tier_matches_distributed(spark, idx, monkeypatch, kwargs):
     assert tier == dist  # bit-exact: same scorers, same merge order
 
 
+@pytest.fixture(scope="module")
+def pos_idx(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("tier_pos") / "idx")
+    pdf = pd.DataFrame({"doc_id": range(len(DOCS)), "text": DOCS})
+    docs = spark.createDataFrame(pdf, "doc_id long, text string")
+    build.build_index(
+        spark, build.docs_unit_provider(docs), d, num_units=2, partitions=2,
+        with_positions=True,
+    )
+    merge.merge_index(spark, d)
+    return d
+
+
+def _filter(spark):
+    return spark.createDataFrame([(0,), (4,), (6,)], "doc_id long")
+
+
+# every family that runs through the per-unit executor's tier-eligible
+# reduces: (name, call(spark, index_dir) -> DataFrame)
+FAMILIES = [
+    ("or", lambda s, d: query.search(s, d, ["alpha", "gamma"], 5)),
+    ("and", lambda s, d: query.search(s, d, ["alpha", "gamma"], 5, mode="and")),
+    ("must_not", lambda s, d: query.search(
+        s, d, ["alpha", "beta"], 5, exclude_terms=["delta"])),
+    ("exhaustive", lambda s, d: query.search(
+        s, d, ["alpha", "beta"], 5, strategy="exhaustive")),
+    ("maxscore", lambda s, d: query.search(
+        s, d, ["alpha", "beta"], 5, strategy="maxscore")),
+    ("bmw", lambda s, d: query.search(s, d, ["alpha", "beta"], 5, strategy="bmw")),
+    ("filter_include", lambda s, d: query.search(
+        s, d, ["alpha", "gamma"], 5, filter_df=_filter(s))),
+    ("after", lambda s, d: query.search_after(
+        s, d, ["alpha", "beta"], 3, after=(1.2, 0))),
+    ("phrase", lambda s, d: query.search_phrase(s, d, ["beta", "gamma"], 5)),
+    ("phrase_prefix", lambda s, d: query.search_phrase_prefix(
+        s, d, ["beta", "ga"], 5)),
+    ("min_should", lambda s, d: query.search_min_should_match(
+        s, d, ["alpha", "beta", "gamma"], 2, 5)),
+    ("proximity", lambda s, d: query.search_proximity(
+        s, d, ["alpha", "gamma"], 2, 5)),
+    ("explain", lambda s, d: query.explain_score(
+        s, d, ["alpha", "beta", "gamma", "zz_missing"], 4)),
+]
+
+
+@pytest.mark.parametrize("call", [c for _, c in FAMILIES], ids=[n for n, _ in FAMILIES])
+def test_family_tier_parity(spark, pos_idx, monkeypatch, call):
+    """Each family gives bit-identical rows from the Spark job and from
+    the driver tier, and the default budget really takes the tier."""
+    monkeypatch.setenv("PGSPARK_QUERY_DRIVER_BYTES", "0")
+    dist_df = call(spark, pos_idx)
+    dist = [tuple(r) for r in dist_df.collect()]
+    monkeypatch.delenv("PGSPARK_QUERY_DRIVER_BYTES")
+    tier_df = call(spark, pos_idx)
+    tier = [tuple(r) for r in tier_df.collect()]
+    assert dist  # every case matches something
+    assert tier == dist
+    assert not isinstance(dist_df, query._DriverLocalDataFrame)
+    assert isinstance(tier_df, query._DriverLocalDataFrame)
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda s, d: query.search_phrase(s, d, ["beta", "gamma"], k=None),
+        lambda s, d: query.score_all_matches(s, d, ["alpha", "beta"]),
+    ],
+    ids=["phrase_all", "score_all_matches"],
+)
+def test_all_rows_reduce_stays_distributed(spark, pos_idx, call):
+    """Reduces that keep every row feed further DataFrame work, so they
+    never take the driver tier (a driver result would become a VALUES
+    literal of every row)."""
+    df = call(spark, pos_idx)
+    assert not isinstance(df, query._DriverLocalDataFrame)
+    assert sorted(df.columns) == ["doc_id", "score"]
+    assert df.count() > 0
+
+
 def test_tier_gate_bounds_bytes(idx):
     # a cap smaller than the decode working set must refuse the tier
     assert not query._driver_tier_ok([0], {"alpha": 10**9}, ["alpha"])
@@ -107,9 +186,9 @@ def test_distributed_expansion_matches_driver_stream(spark, idx, monkeypatch):
         lambda: query.expand_fuzzy(idx, "gamm", 1, 16, prefix_length=0,
                                    transpositions=True),
     ]
-    monkeypatch.setenv("PGSPARK_EXPAND_DRIVER_BYTES", str(64 << 20))
+    monkeypatch.setenv("PGSPARK_QUERY_DRIVER_BYTES", str(64 << 20))
     stream = [c() for c in cases]
-    monkeypatch.setenv("PGSPARK_EXPAND_DRIVER_BYTES", "0")  # force the job
+    monkeypatch.setenv("PGSPARK_QUERY_DRIVER_BYTES", "0")  # force the job
     job = [c() for c in cases]
     assert job == stream
     assert stream[0]  # *eta matches beta/zeta/eta-family terms

@@ -110,7 +110,7 @@ def main():
     lex = spark.read.parquet(merge.lexicon_path(idx)).select("term")
     dump("expand_fuzzy_distributed_after.txt",
          "# expand_fuzzy(prefix_length=0) over a lexicon beyond "
-         "PGSPARK_EXPAND_DRIVER_BYTES: mapInArrow(numpy DP) over the "
+         "PGSPARK_QUERY_DRIVER_BYTES: mapInArrow(numpy DP) over the "
          "lexicon scan + TakeOrderedAndProject(term) — round 5 streamed "
          "the whole lexicon through the driver at this setting\n\n"
          + formatted(
